@@ -13,8 +13,9 @@ table storage:
     POST /export/:ct         -> Engine.export_csv         (L4: 1000 rows)
 
 The import pipeline is ONE lazy plan end to end (csv scan -> validate ->
-FK resolve -> components -> media match -> merge); actions happen only
-at the final write and the counter aggregation.
+FK resolve -> components -> media match -> merge); its actions are the
+invalid-row count and the final write. The created/updated counters ride
+that write as an ``Observation``, so the merge runs exactly once.
 """
 
 from __future__ import annotations
@@ -23,7 +24,8 @@ import os
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from advanced_strapi_import_spark.operators import components as C
 from advanced_strapi_import_spark.operators import export as X
@@ -41,6 +43,28 @@ from advanced_strapi_import_spark.sources.csv_source import csv_scan, preview
 MAX_CSV_BYTES = 10 * 1024 * 1024
 
 
+def _as_nullable(dt: DataType) -> DataType:
+    """``dt`` as a parquet write stores it: every field, array element
+    and map value nullable (Spark's writer relaxes them all)."""
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _dir_stamp(path: str) -> tuple[int, int]:
+    """Identity of a table directory's current content: any write
+    replaces the directory or changes its entries."""
+    st = os.stat(path)
+    return st.st_ino, st.st_mtime_ns
+
+
 def check_csv_file(path: str) -> None:
     """Reject non-.csv and >10MB inputs with the reference's error
     surface before any Spark plan is built."""
@@ -56,6 +80,11 @@ class Engine:
     registry: Registry
     storage_root: str
     _media: dict[str, DataFrame] = field(default_factory=dict)
+    # parquet table path -> (directory stamp, schema as read back): one
+    # entry per path, so the memo is bounded by the number of tables
+    _schemas: dict[str, tuple[tuple[int, int], StructType]] = field(
+        default_factory=dict
+    )
 
     # -- storage ---------------------------------------------------------
     def _path(self, ct_name: str) -> str:
@@ -66,10 +95,24 @@ class Engine:
         parquet (default), orc, or json (JSONL); all three are
         splittable columnar/line formats Spark scans in parallel with
         pushdown (parquet/orc) or schema inference capped by the
-        stored schema (json)."""
-        if fmt == "parquet":
-            return self.spark.read.parquet(self._path(ct_name))
-        return self.spark.read.format(fmt).load(self._path(ct_name))
+        stored schema (json).
+
+        Parquet reads skip Spark's schema-inference job (one footer-read
+        job per read) when the directory is unchanged since this engine
+        wrote or read it; a write from outside the engine changes the
+        directory stamp and re-infers."""
+        path = self._path(ct_name)
+        if fmt != "parquet":
+            return self.spark.read.format(fmt).load(path)
+        if not os.path.exists(path):
+            return self.spark.read.parquet(path)  # Spark's own missing-path error
+        stamp = _dir_stamp(path)
+        memo = self._schemas.get(path)
+        if memo is not None and memo[0] == stamp:
+            return self.spark.read.schema(memo[1]).parquet(path)
+        df = self.spark.read.parquet(path)
+        self._schemas[path] = (stamp, df.schema)
+        return df
 
     def write_table(
         self, ct_name: str, df: DataFrame, *,
@@ -96,6 +139,8 @@ class Engine:
             os.rename(tmp, path)
         else:
             writer.save(path)
+        if fmt == "parquet":
+            self._schemas[path] = (_dir_stamp(path), _as_nullable(df.schema))
 
     def has_table(self, ct_name: str) -> bool:
         return os.path.exists(self._path(ct_name))
@@ -159,7 +204,7 @@ class Engine:
         check_csv_file(path)
         ct = self.registry.get(ct_name)
         res = V.validate_df(csv_scan(self.spark, path), ct, self.registry)
-        # four consumers (invalid collect, preview, two counts) would
+        # three consumers (invalid collect, preview, the counts) would
         # otherwise each re-run the CSV scan + validation projection
         cached = res.all.persist()
         try:
@@ -167,8 +212,11 @@ class Engine:
                 res.invalid.select(V.ROW_COL, V.ERRORS_COL)
                 .limit(error_cap).collect()
             )
-            total = cached.count()
-            valid_rows = res.valid.count()
+            # both counts in one aggregate: valid rows are the error-free ones
+            total, valid_rows = cached.agg(
+                F.count(F.lit(1)),
+                F.count(F.when(F.size(V.ERRORS_COL) == 0, 1)),
+            ).first()
             return {
                 "errors": res.schema_errors
                 + [e for r in invalid for e in r[V.ERRORS_COL]],
@@ -228,8 +276,8 @@ class Engine:
         check_csv_file(path)
         ct = self.registry.get(ct_name)
         res = V.validate_df(csv_scan(self.spark, path), ct, self.registry)
-        # the scan+validate subtree feeds n_invalid, the error collect,
-        # the merge counters AND the table write — cache it once
+        # the scan+validate subtree feeds n_invalid, the error collect
+        # AND the table write — cache it once
         res.all.persist()
         try:
             return self._import_csv_body(
@@ -309,15 +357,16 @@ class Engine:
         # for duplicate upsert keys (reference processes rows sequentially)
         df = df.drop(*[c for c in df.columns if c.startswith("__dot__")])
 
+        # the counters ride the table write: no separate pass over the batch
+        obs = Observation()
         if upsert and self.has_table(ct_name):
             result = U.merge(self.table(ct_name), df, upsert_field, order_col=V.ROW_COL)
-            counters = result.counters.collect()[0]
-            self.write_table(ct_name, result.merged, batch_size=batch_size)
-            created, updated = counters["created"], counters["updated"]
+            self.write_table(ct_name, result.observed(obs), batch_size=batch_size)
         else:
-            df = df.drop(V.ROW_COL)
-            created = df.count()
-            updated = 0
+            if upsert:
+                # one row per key, as the merge would leave it
+                df = U.dedupe_batch(df, upsert_field, V.ROW_COL)
+            df = df.drop(V.ROW_COL).observe(obs, F.count(F.lit(1)).alias("created"))
             if self.has_table(ct_name):
                 self.write_table(
                     ct_name,
@@ -326,7 +375,12 @@ class Engine:
                 )
             else:
                 self.write_table(ct_name, df, batch_size=batch_size)
-        return {"created": created, "updated": updated, "invalidRows": n_invalid}
+        counters = obs.get
+        return {
+            "created": counters["created"],
+            "updated": counters.get("updated", 0),
+            "invalidRows": n_invalid,
+        }
 
     def export_csv(
         self,
@@ -397,8 +451,6 @@ class Engine:
         df = df.limit(limit)
         obs = None
         if stats_out is not None:
-            from pyspark.sql import Observation
-
             obs = Observation()
             df = df.observe(obs, F.count(F.lit(1)).alias("n_rows"))
         X.write_csv(df, out_path)

@@ -10,14 +10,15 @@ with SQL MERGE semantics:
     untouched rows -> pass through
 
 On a Delta/Iceberg table this would be ``MERGE INTO``; the engine's
-storage-agnostic fallback is the classic join+union rewrite, which is
-what MERGE compiles to anyway. Counters (created/updated — the
-reference's import result, csv-import.js:364-368) come from the same
-lazy plan, no extra scan of the target.
+storage-agnostic fallback is ONE full outer join of target and batch,
+each side carrying a presence marker. Every output row knows which side
+it came from, so the merged table and the counters (created/updated —
+the reference's import result, csv-import.js:364-368) come from the same
+flagged frame: the counters ride whatever action writes the merge
+(:meth:`MergeResult.observed`), no second pass over either side.
 
-Scale: the merge shuffles both sides by the key once; with a bucketed
-target the shuffle drops to the batch side only. The batch is typically
-<< target, so AQE picks broadcast for the existence join.
+Scale: the join shuffles both sides by the key once, and the batch
+subtree (CSV scan, validation, FK resolution) appears in the plan once.
 """
 
 from __future__ import annotations
@@ -27,12 +28,41 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window, functions as F
 
 
+#: presence markers of the flagged merge frame: lit(True) on each side,
+#: NULL where the full outer join found no row on that side
+IN_TARGET = "__in_target"
+IN_BATCH = "__in_batch"
+
+
+def _counter_columns() -> list:
+    # count(when(...)) is 0, never NULL, over zero rows
+    return [
+        F.count(F.when(F.col(IN_TARGET).isNull(), 1)).alias("created"),
+        F.count(F.when(F.col(IN_TARGET) & F.col(IN_BATCH), 1)).alias("updated"),
+    ]
+
+
 @dataclass
 class MergeResult:
-    merged: DataFrame      # post-merge table content
-    created: DataFrame     # rows that were inserted
-    updated: DataFrame     # rows that were overwritten
-    counters: DataFrame    # one row: created / updated counts (A1)
+    flagged: DataFrame     # post-merge content + IN_TARGET/IN_BATCH markers
+
+    @property
+    def merged(self) -> DataFrame:
+        """Post-merge table content."""
+        return self.flagged.drop(IN_TARGET, IN_BATCH)
+
+    @property
+    def counters(self) -> DataFrame:
+        """One row: created / updated counts (A1)."""
+        return self.flagged.agg(*_counter_columns())
+
+    def observed(self, observation) -> DataFrame:
+        """:attr:`merged` with the counters attached as ``observation``:
+        the action that writes the merge also fills
+        ``observation.get == {"created": .., "updated": ..}``."""
+        return self.flagged.observe(observation, *_counter_columns()).drop(
+            IN_TARGET, IN_BATCH
+        )
 
 
 def dedupe_batch(batch: DataFrame, key: str, order_col: str | None = None) -> DataFrame:
@@ -60,44 +90,35 @@ def dedupe_batch(batch: DataFrame, key: str, order_col: str | None = None) -> Da
 def merge(
     target: DataFrame, batch: DataFrame, key: str, *, order_col: str | None = "__row"
 ) -> MergeResult:
-    """Join+union MERGE: batch wins on key collisions, new keys append.
+    """Full-outer-join MERGE: batch wins on key collisions, new keys append.
 
     Columns are aligned by name; batch columns missing from target are
     dropped, target columns missing from batch keep the target value on
     matched rows (partial update, like the reference's entity update).
     Duplicate keys inside the batch collapse first (last write wins) so
-    the left join cannot fan out target rows.
+    the join cannot fan out target rows. Rows are classified by the
+    presence markers, never by key nullness: a NULL key matches nothing,
+    so a target row with a NULL key passes through unchanged and a batch
+    row with a NULL key is created.
     """
     batch = dedupe_batch(batch, key, order_col)
-    tcols = target.columns
-    b = batch.alias("b")
-    t = target.alias("t")
-
-    joined = t.join(b, F.col(f"t.{key}") == F.col(f"b.{key}"), "left")
-    merged_existing = joined.select(
+    t = target.withColumn(IN_TARGET, F.lit(True)).alias("t")
+    b = batch.withColumn(IN_BATCH, F.lit(True)).alias("b")
+    joined = t.join(b, F.col(f"t.{key}") == F.col(f"b.{key}"), "full_outer")
+    flagged = joined.select(
         *[
+            # one coalesce covers all three cases: matched (batch wins,
+            # NULL batch cells keep the target value), target-only and
+            # batch-only (the other side is all NULL)
             F.coalesce(F.col(f"b.{c}"), F.col(f"t.{c}")).alias(c)
             if c in batch.columns
             else F.col(f"t.{c}").alias(c)
-            for c in tcols
+            for c in target.columns
         ],
-        F.col(f"b.{key}").isNotNull().alias("__was_updated"),
+        F.col(f"t.{IN_TARGET}").alias(IN_TARGET),
+        F.col(f"b.{IN_BATCH}").alias(IN_BATCH),
     )
-
-    created = batch.join(target.select(key), key, "left_anti").select(
-        *[
-            (F.col(c) if c in batch.columns else F.lit(None).cast(dict(target.dtypes)[c])).alias(c)
-            for c in tcols
-        ]
-    )
-    updated = merged_existing.filter("__was_updated").drop("__was_updated")
-    merged = merged_existing.drop("__was_updated").unionByName(created)
-
-    counters = merged_existing.agg(
-        # sum() over zero rows is NULL — an empty target must still count 0
-        F.coalesce(F.sum(F.col("__was_updated").cast("long")), F.lit(0)).alias("updated")
-    ).crossJoin(created.agg(F.count(F.lit(1)).alias("created"))).select("created", "updated")
-    return MergeResult(merged=merged, created=created, updated=updated, counters=counters)
+    return MergeResult(flagged=flagged)
 
 
 # ---------------------------------------------------------------------------
@@ -108,7 +129,7 @@ def merge_into_sql(
 ) -> str:
     """Render the ``MERGE INTO`` statement equivalent to :func:`merge`:
     matched -> batch values win, unmatched -> insert. Partial update
-    (batch columns only) mirrors the join+union rewrite's coalesce."""
+    (batch columns only) mirrors the full-outer-join rewrite's coalesce."""
     if not columns:
         raise ValueError("columns must be non-empty")
     sets = ", ".join(f"t.{c} = s.{c}" for c in columns if c != key)
@@ -130,7 +151,7 @@ def merge_catalog_table(
     """Atomic upsert into a catalog table via ``MERGE INTO`` — the sink
     to use when the target is a Delta or Iceberg table (v2 tables with
     row-level operations): one transactional commit instead of the
-    read-modify-overwrite cycle of the join+union rewrite, and no
+    read-modify-overwrite cycle of the full-outer-join rewrite, and no
     full-table rewrite for small batches (formats with deletion vectors
     / merge-on-read touch only matched files).
 

@@ -476,7 +476,7 @@ SELECT b.custkey, b.name, b.acctbal, b.active, b.email, b.segment,
 FROM batch b WHERE b.custkey % 3 <> 0
 """,
     doc="§3.1 composed endpoint: validate+cast -> FK cascade -> single "
-        "component -> media prefix match -> join+union MERGE, one lazy "
+        "component -> media prefix match -> full-outer-join MERGE, one lazy "
         "plan; hash pins the merged table including struct-wins (batch "
         "address wholesale, NULL zip and all) vs per-column coalesce "
         "(NULL batch docs keep target docs) semantics.",

@@ -55,7 +55,7 @@ created AS (
 SELECT id, name, acctbal, segment FROM existing
 UNION ALL SELECT * FROM created
 """,
-    doc="J6: SQL-MERGE semantics via join+union (Delta MERGE INTO analog).",
+    doc="J6: SQL-MERGE semantics via one full outer join (Delta MERGE INTO analog).",
 )
 def upsert_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
     target, batch = _merge_inputs(spark, sf_dir)

@@ -27,6 +27,54 @@ def _csv(tmp_path, name, text):
     return str(p)
 
 
+def _bounded(fn, *args, seconds=120, **kw):
+    """fn(*args, **kw), failing instead of hanging past ``seconds``: the
+    import counters ride the write as an Observation, whose ``get``
+    would wait forever if the write's plan never reported them."""
+    import threading
+
+    out = {}
+
+    def run():
+        try:
+            out["value"] = fn(*args, **kw)
+        except BaseException as e:  # re-raised on the test thread
+            out["error"] = e
+
+    th = threading.Thread(target=run, daemon=True)
+    th.start()
+    th.join(seconds)
+    assert not th.is_alive(), f"{fn.__name__} blocked for over {seconds}s"
+    if "error" in out:
+        raise out["error"]
+    return out["value"]
+
+
+def _newest_job(spark) -> int:
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty(10_000)
+    jobs = sc.statusStore().jobsList(None)
+    return jobs.apply(0).jobId() if jobs.size() else -1
+
+
+def _sql_actions(spark, fn, *args, **kw):
+    """(fn's result, number of SQL actions it ran): the root SQL
+    executions the status store gained during the call."""
+    sc = spark.sparkContext._jsc.sc()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def newest(k=64):
+        sc.listenerBus().waitUntilEmpty(10_000)
+        n = store.executionsCount()
+        page = store.executionsList(max(0, n - k), k)
+        return [page.apply(i) for i in range(page.size())]
+
+    before = max((e.executionId() for e in newest(1)), default=-1)
+    out = fn(*args, **kw)
+    execs = [e for e in newest() if e.executionId() > before]
+    return out, sum(e.rootExecutionId() == e.executionId() for e in execs)
+
+
 def test_list_content_types(engine):
     names = {t["uid"] for t in engine.list_content_types()}
     assert "api::company.company" in names
@@ -87,6 +135,85 @@ def test_upsert_workflow(engine, tmp_path):
     rows = {r["name"]: r for r in engine.table("company").collect()}
     assert rows["Acme"]["established"] == 2001 and rows["Acme"]["country"] == 3
     assert rows["Newco"]["established"] == 2020
+
+
+def test_verbs_run_only_their_own_actions(engine, spark, tmp_path):
+    """Beyond the CSV scan's own header read, validate_csv runs three
+    SQL actions: the capped error collect, ONE aggregate for both row
+    counts, and the preview. An import runs two: the invalid-row count
+    and the table write; its created/updated counters ride the write,
+    with no count or collect of their own."""
+    from advanced_strapi_import_spark.sources.csv_source import csv_scan
+
+    p1 = _csv(tmp_path, "a.csv",
+              "name,country,established,active\n"
+              "Acme,India,2000,true\nBelco,USA,1990,no\n,USA,bad,x\n")
+    _, scan = _sql_actions(spark, csv_scan, spark, p1)
+    rep, n = _sql_actions(spark, engine.validate_csv, p1, "company")
+    assert (rep["totalRows"], rep["validRows"], rep["invalidRows"]) == (3, 2, 1)
+    assert n == scan + 3
+    out, n = _sql_actions(spark, engine.import_csv, p1, "company")
+    assert out == {"created": 2, "updated": 0, "invalidRows": 1}
+    assert n == scan + 2
+    p2 = _csv(tmp_path, "b.csv",
+              "name,country,established,active\n"
+              "Acme,China,2001,false\nNewco,India,2020,yes\n")
+    out, n = _sql_actions(spark, engine.import_csv, p2, "company",
+                          upsert=True, upsert_field="name")
+    assert out == {"created": 1, "updated": 1, "invalidRows": 0}
+    assert n == scan + 2
+
+
+def test_table_reads_recorded_schema_without_inference(engine, spark, tmp_path):
+    """Engine.table() reads a table write_table wrote with the schema
+    recorded at write time: no schema-inference job, and exactly the
+    schema Spark would infer from the files (parquet makes every field,
+    array element and map value nullable)."""
+    from pyspark.sql import functions as F
+
+    office = _csv(tmp_path, "o.csv",
+                  "id,name,location.street,location.city\n1,HQ,1 Main St,Pune\n")
+    engine.import_csv(office, "office")
+    engine.import_csv(office, "office", upsert=True, upsert_field="id")
+    engine.import_csv(_csv(tmp_path, "c.csv",
+                           "name,country,established,active\nAcme,India,2000,true\n"),
+                      "company")
+    engine.write_table("nested", spark.range(3).select(
+        "id",  # non-nullable
+        F.struct(F.col("id").alias("a"), F.lit("x").alias("b")).alias("s"),
+        F.array("id").alias("arr"),
+        F.create_map(F.lit("k"), F.col("id")).alias("m"),
+        F.array(F.struct(F.col("id").cast("double").alias("x"))).alias("arrs"),
+    ))
+    engine.write_table("empty", spark.range(0))
+    for ct in ("country", "company", "office", "nested", "empty"):
+        j0 = _newest_job(spark)
+        got = engine.table(ct).schema
+        assert _newest_job(spark) == j0, f"{ct}: table() ran a job"
+        assert got == spark.read.parquet(engine._path(ct)).schema, ct
+
+
+def test_table_schema_memo_sees_outside_writes(engine, spark):
+    """A plain parquet overwrite from outside the engine changes the
+    table directory, so the next table() re-infers and sees it."""
+    from pyspark.sql import functions as F
+
+    assert "extra" not in engine.table("country").columns
+    spark.createDataFrame(COUNTRIES, "id long, name string, code string").withColumn(
+        "extra", F.lit(1)
+    ).write.mode("overwrite").parquet(engine._path("country"))
+    df = engine.table("country")
+    assert "extra" in df.columns
+    assert {r["extra"] for r in df.collect()} == {1}
+
+
+def test_table_schema_memo_one_entry_per_path(engine, spark):
+    for i in range(20):
+        engine.write_table(f"t{i % 2}", spark.range(i + 1))
+        assert engine.table(f"t{i % 2}").count() == i + 1
+    assert sorted(engine._schemas) == sorted(
+        engine._path(ct) for ct in ("country", "t0", "t1")
+    )
 
 
 def test_export_round_trip(engine, spark, tmp_path):
@@ -189,16 +316,77 @@ def test_upsert_duplicate_keys_last_write_wins(engine, tmp_path):
               "Acme,China,2001,false\n"
               "Acme,USA,2002,true\n"
               "Newco,India,2020,yes\n")
-    out = engine.import_csv(p2, "company", upsert=True, upsert_field="name")
-    assert out["updated"] == 1 and out["created"] == 1
+    out = _bounded(engine.import_csv, p2, "company", upsert=True, upsert_field="name")
+    assert out == {"created": 1, "updated": 1, "invalidRows": 0}
     rows = engine.table("company").collect()
     acmes = [r for r in rows if r["name"] == "Acme"]
     assert len(acmes) == 1
     # last CSV row wins
     assert acmes[0]["established"] == 2002 and acmes[0]["country"] == 4
 
+    # an upsert into a table that does not exist yet dedupes the same
+    # way: one stored row per key, every key created
+    fresh = Engine(spark=engine.spark, registry=REGISTRY,
+                   storage_root=str(tmp_path / "fresh"))
+    out = _bounded(fresh.import_csv, p2, "company", upsert=True, upsert_field="name")
+    assert out == {"created": 2, "updated": 0, "invalidRows": 0}
+    rows = {r["name"]: r for r in fresh.table("company").collect()}
+    assert len(rows) == 2 and rows["Acme"]["established"] == 2002
+
+
+def test_upsert_null_keys(engine, tmp_path):
+    """NULL upsert keys match nothing: a stored row with a NULL key
+    passes through unchanged, and the batch's NULL-key rows collapse to
+    one created row (last write wins), like any duplicate key."""
+    p1 = _csv(tmp_path, "a.csv",
+              "id,name,established\n1,Acme,2000\n,Orphan,1999\n")
+    assert _bounded(engine.import_csv, p1, "company") == {
+        "created": 2, "updated": 0, "invalidRows": 0}
+    p2 = _csv(tmp_path, "b.csv",
+              "id,name,established\n"
+              "1,Acme2,2001\n"
+              ",NullA,2010\n"
+              ",NullB,2011\n"
+              "7,Seven,2020\n"
+              "8,Bad,notanumber\n")
+    out = _bounded(engine.import_csv, p2, "company", upsert=True, upsert_field="id")
+    assert out == {"created": 2, "updated": 1, "invalidRows": 1}
+    rows = sorted((r["id"] or 0, r["name"], r["established"])
+                  for r in engine.table("company").collect())
+    assert rows == [(0, "NullB", 2011), (0, "Orphan", 1999),
+                    (1, "Acme2", 2001), (7, "Seven", 2020)]
+
+
+def test_import_degenerate_inputs_counters(engine, tmp_path):
+    """Header-only and all-invalid CSVs, into new and existing tables:
+    the write-borne counters come back (never a hang on the observation)
+    and are exact."""
+    header = "name,country,established,active\n"
+    empty = _csv(tmp_path, "empty.csv", header)
+    bad = _csv(tmp_path, "bad.csv", header + ",India,x,true\nAcme,India,y,true\n")
+    zero = {"created": 0, "updated": 0, "invalidRows": 0}
+    two_bad = {"created": 0, "updated": 0, "invalidRows": 2}
+    # new tables: insert and upsert
+    fresh = Engine(spark=engine.spark, registry=REGISTRY,
+                   storage_root=str(tmp_path / "fresh"))
+    assert _bounded(fresh.import_csv, empty, "company",
+                    upsert=True, upsert_field="name") == zero
+    assert _bounded(engine.import_csv, empty, "company") == zero
+    assert _bounded(engine.import_csv, bad, "company") == two_bad
+    assert engine.table("company").count() == 0
+    # existing tables
+    good = _csv(tmp_path, "good.csv", header + "Acme,India,2000,true\n")
+    assert _bounded(engine.import_csv, good, "company")["created"] == 1
+    for path, want in ((empty, zero), (bad, two_bad)):
+        assert _bounded(engine.import_csv, path, "company") == want
+        assert _bounded(engine.import_csv, path, "company",
+                        upsert=True, upsert_field="name") == want
+    assert [r["name"] for r in engine.table("company").collect()] == ["Acme"]
+
 
 def test_upsert_into_empty_target_counts_zero_updated(spark, tmp_path):
+    from pyspark.sql import Observation
+
     from advanced_strapi_import_spark.operators import upsert as U
 
     target = spark.createDataFrame([], "id long, name string")
@@ -206,6 +394,21 @@ def test_upsert_into_empty_target_counts_zero_updated(spark, tmp_path):
     res = U.merge(target, batch, "id")
     row = res.counters.collect()[0]
     assert row["created"] == 1 and row["updated"] == 0
+
+    # the same counters ride whatever action writes the merged rows
+    obs = Observation()
+    merged = res.observed(obs)
+    assert merged.columns == ["id", "name"]
+    assert merged.collect() == [(1, "a")]
+    assert _bounded(lambda: obs.get) == {"created": 1, "updated": 0}
+
+    # empty batch: nothing counted; a NULL-key target row is untouched
+    target = spark.createDataFrame([(None, "x"), (2, "y")], "id long, name string")
+    res = U.merge(target, batch.limit(0), "id")
+    obs = Observation()
+    res.observed(obs).write.format("noop").mode("overwrite").save()
+    assert _bounded(lambda: obs.get) == {"created": 0, "updated": 0}
+    assert set(map(tuple, res.merged.collect())) == {(None, "x"), (2, "y")}
 
 
 def test_merge_into_sql_rendering():
@@ -224,7 +427,7 @@ def test_merge_into_sql_rendering():
 def test_merge_catalog_table_requires_row_level_format(spark, tmp_path):
     # Without Delta/Iceberg in the container the session catalog only has
     # v1 tables, which cannot MERGE; the sink must surface the engine
-    # error (the caller then falls back to the join+union merge()).
+    # error (the caller then falls back to the full-outer-join merge()).
     # With a row-level-capable catalog configured this same call is the
     # atomic path — the statement itself is format-agnostic.
     import pytest

@@ -67,9 +67,9 @@ def test_checkpoint_tracked_reliable_switch(spark, tmp_path):
     returns the same rows."""
     import pytest
 
+    had_dir = spark.sparkContext.getCheckpointDir()
     spark.conf.set(caching.RELIABLE_CHECKPOINT_CONF, "true")
     try:
-        had_dir = spark.sparkContext.getCheckpointDir()
         if had_dir is None:
             with pytest.raises(ValueError, match="checkpoint"):
                 caching.checkpoint_tracked(spark.range(3))
@@ -88,6 +88,11 @@ def test_checkpoint_tracked_reliable_switch(spark, tmp_path):
     finally:
         spark.conf.set(caching.RELIABLE_CHECKPOINT_CONF, "false")
         caching.release_tracked()
+        # tmp_path is deleted after this test: put the shared session's
+        # checkpoint dir back (None unsets it; a prior dir gets a fresh
+        # subdirectory under it, as every setCheckpointDir call does)
+        spark.sparkContext.setCheckpointDir(had_dir)
+        assert (spark.sparkContext.getCheckpointDir() is None) == (had_dir is None)
 
 
 def test_load_events_memo_is_conf_aware(spark):
