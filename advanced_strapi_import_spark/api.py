@@ -15,7 +15,9 @@ table storage:
 The import pipeline is ONE lazy plan end to end (csv scan -> validate ->
 FK resolve -> components -> media match -> merge); its actions are the
 invalid-row count and the final write. The created/updated counters ride
-that write as an ``Observation``, so the merge runs exactly once.
+that write as an ``Observation``, so the merge runs exactly once. Media
+matching reads the file table the ``ingest_*zip`` verb persisted, as the
+reference matches against the media library it uploaded to once.
 """
 
 from __future__ import annotations
@@ -26,6 +28,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+from pyspark.sql.window import Window
 
 from advanced_strapi_import_spark.operators import components as C
 from advanced_strapi_import_spark.operators import export as X
@@ -79,7 +82,10 @@ class Engine:
     spark: SparkSession
     registry: Registry
     storage_root: str
+    # media field -> its ingested files, and the persisted file table
+    # that frame reads (one table per ingest, shared by its fields)
     _media: dict[str, DataFrame] = field(default_factory=dict)
+    _media_tables: dict[str, DataFrame] = field(default_factory=dict)
     # parquet table path -> (directory stamp, schema as read back): one
     # entry per path, so the memo is bounded by the number of tables
     _schemas: dict[str, tuple[tuple[int, int], StructType]] = field(
@@ -230,16 +236,52 @@ class Engine:
         finally:
             cached.unpersist()
 
+    def _persist_media(self, files: DataFrame) -> DataFrame:
+        """Persist an ingested file table (evictable: a lost block is
+        recomputed from the archive). Spark keys its cache by plan, and
+        an archive ingested again plans like its earlier ingest, whose
+        entry holds the archive as it was then: drop that entry first."""
+        for table in self._media_tables.values():
+            if table.sameSemantics(files):
+                table.unpersist()
+        return files.persist()
+
+    def _route_media(self, table: DataFrame, routes: dict[str, DataFrame]) -> None:
+        """Point media fields at ``routes`` (field -> files read from the
+        persisted ``table``) and unpersist every file table no field
+        reads any more, so the engine holds one per live ingest."""
+        old = list(self._media_tables.values())
+        for fld, files in routes.items():
+            self._media[fld] = files
+            self._media_tables[fld] = table
+        live = list(self._media_tables.values())
+        for table in old:
+            # a table planned like a live one shares its cache entry
+            if not any(table.sameSemantics(t) for t in live):
+                table.unpersist()
+
     def ingest_zip(self, path: str, media_field: str) -> DataFrame:
-        """POST /upload-zip (S8): flat unzip -> files table."""
+        """POST /upload-zip (S8): flat unzip -> files table.
+
+        The table is built once here, as the reference uploads the files
+        to its media library once: it is persisted and filled, and every
+        later ``import_csv`` matching against ``media_field`` reads the
+        cached rows instead of unzipping the archive again."""
         files = Z.hygiene_filter(Z.zip_entries(self.spark, path, skip_corrupt=True))
         # corrupt-archive marker rows are a side signal, not media files:
         # stored they would inflate counts and join as matchable names
         files = files.filter(F.col("name") != "__CORRUPT__")
-        files = files.dropDuplicates(["name", "entry_path"]).withColumn(
-            "mime", M.mime_type(F.col("name"))
+        # the id import_csv's media match attaches: entry-path order,
+        # as Z.media_files numbers the foldered verb's files
+        files = self._persist_media(
+            files.dropDuplicates(["name", "entry_path"])
+            .withColumn("mime", M.mime_type(F.col("name")))
+            .withColumn(
+                "id", F.row_number().over(Window.orderBy("zip_path", "entry_path"))
+            )
         )
-        self._media[media_field] = files
+        files.count()
+        self._route_media(files, {media_field: files})
         return files
 
     def ingest_media_zip(self, path: str, ct_name: str, match_field: str) -> DataFrame:
@@ -248,13 +290,20 @@ class Engine:
         Folder names route case-insensitively onto the content type's
         media attributes (the zip router lowercases folder names, so a
         camelCase attribute like ``coverImage`` would otherwise never
-        match import_csv's case-sensitive attribute check)."""
+        match import_csv's case-sensitive attribute check).
+
+        The routed table is built once here: it is persisted, the
+        routing's distinct-field collect fills it, and every later
+        ``import_csv`` with media matching reads the cached rows (no
+        archive read, unzip or id window per import)."""
         ct = self.registry.get(ct_name)
         by_lower = {a.lower(): a for a in ct.attributes}
-        routed = Z.media_files(self.spark, path)
+        routed = self._persist_media(Z.media_files(self.spark, path))
+        routes = {}
         for row in routed.select("field").distinct().collect():
             fld = by_lower.get(row["field"].lower(), row["field"])
-            self._media[fld] = routed.filter(F.col("field") == row["field"])
+            routes[fld] = routed.filter(F.col("field") == row["field"])
+        self._route_media(routed, routes)
         return routed
 
     def import_csv(

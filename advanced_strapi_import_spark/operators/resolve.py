@@ -10,21 +10,31 @@ cascade of DB queries (/root/reference/server/services/csv-import.js:521-620):
     5. $containsi on the first common field
     -- first hit wins, limit 1 per strategy.
 
-Here the whole cascade is ONE set-oriented plan:
+Here the whole cascade is ONE set-oriented plan with a fixed number of
+stages, however many arms the target's fields give:
   - distinct values are resolved once (not once per row — kills the N+1),
-  - exact arms become a broadcast join against a stacked (key, rank, id)
-    lookup built from the target dimension,
-  - each contains (theta) arm only sees values missed by every arm of
-    HIGHER precedence (per-arm anti-join), keeping the non-equi join
-    tiny while preserving strategy order: searchField $containsi
-    outranks the id and common-field exact strategies,
+  - every equality arm, the id arm included, is ONE broadcast join
+    against a stacked (kind, key, num, rank, id) lookup built from the
+    target dimension: string arms match lower(value) under kind 0, the
+    id arm matches Number(value) under kind 1, so a numeric probe never
+    hits a name entry ('2.00' does not resolve to a row named '2.0'),
+  - that join is a left join, aggregated per value to its best hit
+    (the values are already partitioned by the distinct, so no shuffle),
+  - every contains (theta) arm is ONE broadcast theta join whose
+    predicate is the OR of the arms' contains tests and whose rank is
+    that of the first arm that hit. It only sees the values whose best
+    equality hit is missing or ranked below the FIRST contains arm (a
+    filter, no anti-join), which keeps the non-equi join tiny while
+    preserving strategy order: searchField $containsi outranks the id
+    and common-field exact strategies,
   - precedence = min(struct(rank, id)) per value; ties inside one
     strategy break deterministically on min id (the reference takes the
     DB's arbitrary first row — documented divergence).
 
-Scale: the lookup side is the dimension table — broadcast below the
-64 MB threshold, shuffle-hash above; values side never re-shuffles per
-strategy because all equality arms share one join.
+Scale: the lookup side is the dimension table, broadcast (it is the
+reference's FK target, read whole per import); the values side is the
+distinct relation values of one batch, and the per-batch value -> id
+mapping broadcasts back onto the batch rows.
 """
 
 from __future__ import annotations
@@ -75,83 +85,74 @@ def resolve_values(
     exact, contains, id_rank = _strategies(target_ct, registry, search_field)
 
     vals = values.select(VALUE_COL).where(F.col(VALUE_COL).isNotNull()).distinct()
+    tid = F.col(id_col).cast("long").alias("__id")
 
-    # --- stacked exact lookup: one join serves every equality arm --------
-    lookups = []
+    # --- equality arms: ONE join on a stacked (kind, key, num) lookup ----
+    # kind 0: string arms, lower(field) == lower(value).
+    # kind 1: the id arm (csv-import.js:555-566), JS Number(value) == id
+    # as float equality, numeric literals only; try_cast avoids
+    # ANSI-mode cast errors. The kind keeps a numeric probe off the
+    # name entries.
+    lookup = target.select(
+        F.lit(1).alias("__kind"), F.lit("").alias("__k"),
+        F.col(id_col).cast("double").alias("__n"),
+        F.lit(id_rank).alias("__rank"), tid,
+    )
     for rank, fld in exact:
-        lookups.append(
-            target.select(
-                F.lower(F.col(fld).cast("string")).alias("__k"),
-                F.lit(rank).alias("__rank"),
-                F.col(id_col).cast("long").alias("__id"),
-            )
-        )
-    cand_parts = []
-    if lookups:
-        stacked = lookups[0]
-        for l in lookups[1:]:
-            stacked = stacked.unionByName(l)
-        cand_parts.append(
-            vals.join(
-                broadcast(stacked), F.lower(F.col(VALUE_COL)) == F.col("__k"), "inner"
-            ).select(VALUE_COL, "__rank", "__id")
-        )
-
-    # --- id arm (numeric values only; csv-import.js:555-566) -------------
-    # JS compares Number(value) == id (float equality); try_cast avoids
-    # ANSI-mode cast errors on non-numeric strings.
-    ids = target.select(F.col(id_col).cast("long").alias("__id"))
-    cand_parts.append(
-        vals.where(is_numeric(F.col(VALUE_COL)))
-        .join(
-            broadcast(ids),
-            F.col(VALUE_COL).try_cast("double") == F.col("__id").cast("double"),
-            "inner",
-        )
-        .select(VALUE_COL, F.lit(id_rank).alias("__rank"), "__id")
+        lookup = lookup.unionByName(target.select(
+            F.lit(0).alias("__kind"), F.lower(F.col(fld).cast("string")).alias("__k"),
+            F.lit(0.0).alias("__n"), F.lit(rank).alias("__rank"), tid,
+        ))
+    v = F.col(VALUE_COL)
+    probes = vals.select(VALUE_COL, F.inline(F.array_compact(F.array(
+        F.struct(F.lit(0).alias("__kind"), F.lower(v).alias("__k"),
+                 F.lit(0.0).alias("__n")),
+        F.when(is_numeric(v), F.struct(
+            F.lit(1).alias("__kind"), F.lit("").alias("__k"),
+            v.try_cast("double").alias("__n"),
+        )),
+    ))))
+    # left join: every value keeps one row, with its best equality hit
+    # or none, and the values stay partitioned by the distinct above
+    best = (
+        probes.join(broadcast(lookup), ["__kind", "__k", "__n"], "left")
+        .groupBy(VALUE_COL)
+        .agg(F.min(F.when(F.col("__rank").isNotNull(),
+                          F.struct("__rank", "__id"))).alias("__best"))
     )
+    found = best.where(F.col("__best").isNotNull())
 
-    exact_cand = cand_parts[0]
-    for p in cand_parts[1:]:
-        exact_cand = exact_cand.unionByName(p)
-
-    # --- contains (theta) arms -------------------------------------------
-    # Each contains arm fires for the values missed by every arm of
-    # HIGHER precedence (rank < its own), not by all exact arms: in the
-    # reference, searchField $containsi (strategy 2) runs BEFORE the id
-    # and common-field $eqi strategies (csv-import.js:521-620), so a
-    # value that misses searchField-exact but hits searchField-contains
-    # must resolve to the contains hit even when a lower-precedence exact
-    # arm also matches. min(struct(rank, id)) arbitrates across arms, so
-    # a candidate surviving from a later contains arm can never shadow an
-    # earlier one — the anti-join below only bounds the theta-join size.
+    # --- contains arms: ONE broadcast theta join -------------------------
+    # In the reference, searchField $containsi (strategy 2) runs BEFORE
+    # the id and common-field $eqi strategies (csv-import.js:521-620),
+    # so the theta join sees every value no arm ranked above the FIRST
+    # contains arm matched, and a lower-ranked contains arm's hit can
+    # never shadow a better one: min(struct(rank, id)) arbitrates, and a
+    # dimension row hit by several arms takes the first arm's rank.
     if contains:
-        theta_parts = []
-        for rank, fld in contains:
-            higher_hits = (
-                exact_cand.where(F.col("__rank") < rank).select(VALUE_COL).distinct()
-            )
-            missed = vals.join(higher_hits, VALUE_COL, "left_anti")
-            theta_parts.append(
-                missed.join(
-                    broadcast(
-                        target.select(
-                            F.lower(F.col(fld).cast("string")).alias("__k"),
-                            F.col(id_col).cast("long").alias("__id"),
-                        )
-                    ),
-                    F.col("__k").contains(F.lower(F.col(VALUE_COL))),
-                    "inner",
-                ).select(VALUE_COL, F.lit(rank).alias("__rank"), "__id")
-            )
-        for p in theta_parts:
-            exact_cand = exact_cand.unionByName(p)
+        missed = best.where(
+            F.col("__best").isNull() | (F.col("__best.__rank") > contains[0][0])
+        )
+        cols = {fld: f"__c{i}"
+                for i, fld in enumerate(dict.fromkeys(f for _, f in contains))}
+        dim = target.select(tid, *[
+            F.lower(F.col(fld).cast("string")).alias(c) for fld, c in cols.items()
+        ])
+        hits = [(rank, F.col(cols[fld]).contains(F.lower(v))) for rank, fld in contains]
+        pred = hits[0][1]
+        rank_of = F.when(hits[0][1], F.lit(hits[0][0]))
+        for rank, hit in hits[1:]:
+            pred = pred | hit
+            rank_of = rank_of.when(hit, F.lit(rank))
+        theta = missed.join(broadcast(dim), pred, "inner").select(
+            VALUE_COL, F.struct(rank_of.alias("__rank"), "__id").alias("__best")
+        )
+        found = (
+            found.unionByName(theta)
+            .groupBy(VALUE_COL).agg(F.min("__best").alias("__best"))
+        )
 
-    return (
-        exact_cand.groupBy(VALUE_COL)
-        .agg(F.min(F.struct("__rank", "__id")).alias("__best"))
-        .select(VALUE_COL, F.col("__best.__id").alias(RESOLVED_COL))
-    )
+    return found.select(VALUE_COL, F.col("__best.__id").alias(RESOLVED_COL))
 
 
 def resolve_relation(
@@ -175,6 +176,12 @@ def resolve_relation(
       key, csv-import.js:471 — null is the columnar equivalent);
     - multi relations -> array of ids in input token order, misses
       dropped; all-missed -> null (csv-import.js:475-493).
+
+    The value -> id mapping joins back with an explicit broadcast: it
+    has at most one row per distinct relation value of the batch (an
+    import batch is a CSV of at most 10 MB), and without the hint the
+    join plans as a sort-merge join that AQE converts only after both
+    of its shuffles ran.
     """
     attr = ct.attributes[field_name]
     has_dot = dot_col is not None and dot_col in df.columns
@@ -196,7 +203,7 @@ def resolve_relation(
             search_field=search_field, id_col=id_col,
         )
         resolved = (
-            exploded.join(mapping, VALUE_COL, "left")
+            exploded.join(broadcast(mapping), VALUE_COL, "left")
             .groupBy(row_key)
             .agg(
                 F.array_compact(
@@ -213,7 +220,12 @@ def resolve_relation(
                 F.when(F.size("__ids") > 0, F.col("__ids")).alias(field_name),
             )
         )
-        out = work.drop("__tokens", field_name).join(resolved, row_key, "left")
+        # resolved is hash-partitioned on row_key by its groupBy; a
+        # shuffled hash join needs no sort and leaves AQE no late
+        # sort-merge -> broadcast conversion to pay for
+        out = work.drop("__tokens", field_name).join(
+            resolved.hint("shuffle_hash"), row_key, "left"
+        )
     else:
         work = df.withColumn(VALUE_COL, src)
         mapping = resolve_values(
@@ -221,7 +233,7 @@ def resolve_relation(
             search_field=search_field, id_col=id_col,
         )
         out = (
-            work.join(mapping, VALUE_COL, "left")
+            work.join(broadcast(mapping), VALUE_COL, "left")
             .drop(VALUE_COL)
             .withColumn(field_name, F.col(RESOLVED_COL))
             .drop(RESOLVED_COL)

@@ -514,9 +514,13 @@ def lineitem_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-flag inclusive rank gives le = cum_all - off and
     # lt = le - cnt — the identical integers the conditional counts
     # produced. The oracle gate at three SFs pins the equivalence.
+    # Should that element assumption ever break, the estimate finds no
+    # row: the checks left-join back onto est and a missing match counts
+    # as ok=false, so within_bound flips instead of the flag's row
+    # silently dropping out.
     eps = 1.0 / ACC
     le = F.col("cum_all") - F.col("off")
-    ok = (
+    checks = (
         F.broadcast(est)
         .join(
             cum.select(
@@ -527,14 +531,18 @@ def lineitem_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(offs.select("l_returnflag", "off")),
               "l_returnflag")
         .select(
-            "l_returnflag",
+            "l_returnflag", "p",
             (
                 (le >= (F.col("p") - eps) * F.col("n") - 1)
                 & (le - F.col("cnt") <= (F.col("p") + eps) * F.col("n") + 1)
             ).alias("ok"),
         )
+    )
+    ok = (
+        est.select("l_returnflag", "p")
+        .join(checks, ["l_returnflag", "p"], "left")
         .groupBy("l_returnflag")
-        .agg(F.min("ok").alias("within_bound"))
+        .agg(F.min(F.coalesce("ok", F.lit(False))).alias("within_bound"))
     )
     exact = (
         cum.join(F.broadcast(offs), "l_returnflag")

@@ -2392,7 +2392,15 @@ def stream_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _time.time()
     for i in range(3):
-        part = globmod.glob(f"{w}/__w={i}/part-*.parquet")[0]
+        parts = globmod.glob(f"{w}/__w={i}/part-*.parquet")
+        if not parts:
+            # a slice with no rows (all-equal ts put every row in slice
+            # 0) has no directory: an empty part file with the events
+            # schema keeps the three triggers in order
+            empty = f"{w}/__empty_{i}"
+            e.limit(0).coalesce(1).write.parquet(empty)
+            parts = globmod.glob(f"{empty}/part-*.parquet")
+        part = parts[0]
         # flat file name: the file source orders triggers by mtime, so
         # PIN strictly increasing mtimes (000..002) — the one-pass
         # write copies all three back-to-back, and same-millisecond

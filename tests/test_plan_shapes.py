@@ -248,6 +248,13 @@ CASES = [
     # The loop joins plan as SMJ pre-AQE (LogicalRDD has no stats); AQE
     # converts from runtime sizes — the scale-adaptive choice.
     ("dedup_weighted_pagerank", 10, {"bnlj": 0}),
+    # FK cascade: every equality arm is ONE broadcast join, every
+    # contains arm ONE broadcast theta join, and the value -> id mapping
+    # broadcasts back onto the rows; the exchanges are the distinct
+    # values (printed once per branch that reads them) and, for the
+    # multi relation, the per-row id-list aggregate and its join back
+    ("fk_resolve_cascade", 3, {"smj": 0}),
+    ("fk_resolve_multi", 4, {"smj": 0}),
 ]
 
 

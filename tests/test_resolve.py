@@ -36,6 +36,21 @@ def test_cascade_numeric_id(spark):
     assert m == {"2": 2}
 
 
+def test_id_arm_is_number_equality_on_numeric_literals(spark):
+    # JS Number(value) == id: padding, sign, decimals and exponents all
+    # reach the id; a numeric value never probes the name entries, so
+    # '2.00' stays unresolved against a row NAMED '2.0', while '2.0'
+    # itself resolves through the name arm
+    dim = spark.createDataFrame(
+        [(0, "Zero", "Z0"), (1, "2.0", "TWO"), (7, "Seven", "S7")],
+        "id long, name string, code string",
+    )
+    vals = [" 7 ", "+7", "7.0", "7e0", "-0", "2.0", "2.00"]
+    out = R.resolve_values(_vals(spark, vals), dim, COUNTRY, REGISTRY)
+    m = {r[R.VALUE_COL]: r[R.RESOLVED_COL] for r in out.collect()}
+    assert m == {" 7 ": 7, "+7": 7, "7.0": 7, "7e0": 7, "-0": 0, "2.0": 1}
+
+
 def test_cascade_contains_fallback(spark):
     # no exact match; 'nited Stat' is contained in 'United States'
     m = resolved_map(spark, ["nited Stat"])
@@ -72,6 +87,29 @@ def test_search_field_contains_beats_lower_exact(spark):
     assert m == {"5": 1}
 
 
+def test_both_contains_arms_live(spark):
+    # search field 'code' gives a code-contains arm (rank 1) and the
+    # common field 'name' a name-contains arm (last rank); one theta
+    # join serves both and ranks each hit by the first arm that hit
+    dim = spark.createDataFrame(
+        [(1, "Alpha", "ZZ9"), (2, "Zulu", "AB")],
+        "id long, name string, code string",
+    )
+    out = R.resolve_values(
+        _vals(spark, ["z", "a", "ul", "lph", "ZULU", "ab", "q"]), dim,
+        COUNTRY, REGISTRY, search_field="code",
+    )
+    m = {r[R.VALUE_COL]: r[R.RESOLVED_COL] for r in out.collect()}
+    assert m == {
+        "z": 1,     # code contains (ZZ9) beats name contains (Zulu)
+        "a": 2,     # code contains (AB) beats name contains (Alpha, id 1)
+        "ul": 2,    # name contains only
+        "lph": 1,   # name contains only
+        "ZULU": 2,  # name exact
+        "ab": 2,    # code exact
+    }
+
+
 def test_scalar_relation_resolution(spark):
     df = spark.createDataFrame(
         [(1, "Acme", "India"), (2, "Belco", "usa"), (3, "Cori", "Atlantis")],
@@ -87,16 +125,24 @@ def test_scalar_relation_resolution(spark):
 
 def test_multi_relation_resolution(spark):
     df = spark.createDataFrame(
-        [(1, "A", "India, China"), (2, "B", "India,nowhere"), (3, "C", "zzz")],
+        [(1, "A", "India, China"), (2, "B", "India,nowhere"), (3, "C", "zzz"),
+         (4, "D", "China, India, China"), (5, "E", "China,,nowhere"),
+         (6, "F", None)],
         "__row long, name string, tags string",
     )
     out = R.resolve_relation(
         df, "tags", USERS, _countries(spark), COUNTRY, REGISTRY
     )
     got = {r["name"]: r["tags"] for r in out.collect()}
+    assert len(got) == 6           # every row kept
     assert got["A"] == [1, 3]      # input order preserved
     assert got["B"] == [1]         # miss dropped
     assert got["C"] is None        # all missed -> field dropped
+    assert got["D"] == [3, 1, 3]   # a repeated token resolves each time
+    # an empty token is contained in every name ($containsi ''), so it
+    # takes the lowest id
+    assert got["E"] == [3, 1]
+    assert got["F"] is None        # NULL cell
 
 
 def test_dot_notation_precedence(spark):

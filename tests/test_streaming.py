@@ -621,3 +621,30 @@ def test_compaction_kill_points_keyed_store(spark, tmp_path):
     assert g == 1 and ST._compacted_upto(gd) == 3
     assert not os.path.isdir(old_gd)  # stray reaped by the read path
     assert totals(store_a) == {0: 2, 1: 2}
+
+
+def test_stream_transition_matrix_all_equal_ts(spark, tmp_path):
+    """All-equal ts put every event in the first time slice; the empty
+    second and third slices must still drain (they used to have no part
+    file, and the slice copy raised IndexError) and the drained matrix
+    must equal the oracle's batch window over the same events."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import advanced_strapi_import_spark.plans.all  # noqa: F401
+    from advanced_strapi_import_spark.plans.registry import QUERIES
+    from oracle_utils import compare_query
+
+    t = pq.read_table(f"{SF_TEST}/events.parquet")
+    ts = t.column("ts")
+    flat = pa.array([ts[0].as_py()] * t.num_rows, type=ts.type)
+    pq.write_table(t.set_column(t.schema.get_field_index("ts"), "ts", flat),
+                   tmp_path / "events.parquet")
+    con = duckdb.connect()
+    try:
+        con.sql(f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'")
+        spec = QUERIES["stream_transition_matrix"]
+        assert compare_query(spark, con, spec, str(tmp_path)) == []
+    finally:
+        con.close()
