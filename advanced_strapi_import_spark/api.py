@@ -18,6 +18,13 @@ invalid-row count and the final write. The created/updated counters ride
 that write as an ``Observation``, so the merge runs exactly once. Media
 matching reads the file table the ``ingest_*zip`` verb persisted, as the
 reference matches against the media library it uploaded to once.
+
+The batch the validate and import verbs read is ONE partition from the
+scan onwards (:func:`batch_scan`): the reference numbers rows by their
+place in the uploaded file, and a file capped at 10 MB numbers in one
+task without the single-partition shuffle a global ``row_number`` would
+otherwise plan. The validate report is one aggregate (both counts and
+the capped error list) plus the 5-row preview.
 """
 
 from __future__ import annotations
@@ -75,6 +82,22 @@ def check_csv_file(path: str) -> None:
         raise ValueError("Please select a valid CSV file")
     if os.path.exists(path) and os.path.getsize(path) > MAX_CSV_BYTES:
         raise ValueError("Maximum file size: 10MB")
+
+
+def batch_scan(spark: SparkSession, path: str) -> DataFrame:
+    """The API's import batch: the checked CSV, read as ONE partition.
+
+    ``validate_df`` numbers rows with a global ``row_number`` window,
+    which runs in one partition whatever the scan gives it; over a
+    parallel scan Spark first gathers the rows with an ``Exchange
+    SinglePartition``. Coalescing the scan instead hands the window a
+    single partition with no shuffle, and the rows keep file order
+    (split order, then line order), which is the order the "Row N"
+    numbers follow. Only the scan of a file :func:`check_csv_file`
+    capped at 10 MB is narrowed: everything after the window runs in
+    one partition either way."""
+    check_csv_file(path)
+    return csv_scan(spark, path).coalesce(1)
 
 
 @dataclass
@@ -198,6 +221,13 @@ class Engine:
         """POST /upload/:ct — validation report + 5-row preview
         (controllers/csv-import.js:25-84).
 
+        The report is ONE aggregate over the validated batch (the total
+        count, the valid count and the first ``error_cap`` invalid rows'
+        error arrays) plus the bounded preview collect. The batch is one
+        partition (:func:`batch_scan`), so the collected list is in row
+        order and neither the aggregate nor the running count of invalid
+        rows that caps its list shuffles.
+
         The per-row error report is DRIVER-BOUNDED (VERDICT r10 item 2):
         the reference returns every row error in the HTTP response,
         which is fine under its 10 MB upload cap, but a pathological
@@ -207,34 +237,34 @@ class Engine:
         and ``errorsTruncated`` flags the capped case (the complete
         invalid-row frame remains available distributed via
         :func:`validate.validate_df` for side-table writes)."""
-        check_csv_file(path)
         ct = self.registry.get(ct_name)
-        res = V.validate_df(csv_scan(self.spark, path), ct, self.registry)
-        # three consumers (invalid collect, preview, the counts) would
-        # otherwise each re-run the CSV scan + validation projection
-        cached = res.all.persist()
-        try:
-            invalid = (
-                res.invalid.select(V.ROW_COL, V.ERRORS_COL)
-                .limit(error_cap).collect()
-            )
-            # both counts in one aggregate: valid rows are the error-free ones
-            total, valid_rows = cached.agg(
-                F.count(F.lit(1)),
-                F.count(F.when(F.size(V.ERRORS_COL) == 0, 1)),
-            ).first()
-            return {
-                "errors": res.schema_errors
-                + [e for r in invalid for e in r[V.ERRORS_COL]],
-                "warnings": res.warnings,
-                "preview": [r.asDict() for r in res.valid.limit(5).collect()],
-                "totalRows": total,
-                "validRows": valid_rows,
-                "invalidRows": total - valid_rows,
-                "errorsTruncated": total - valid_rows > len(invalid),
-            }
-        finally:
-            cached.unpersist()
+        res = V.validate_df(batch_scan(self.spark, path), ct, self.registry)
+        is_invalid = F.size(V.ERRORS_COL) > 0
+        # invalid rows up to each row, so the list buffers only the rows
+        # it returns: a 10 MB batch can hold millions of invalid rows
+        upto = Window.orderBy(V.ROW_COL).rowsBetween(
+            Window.unboundedPreceding, Window.currentRow
+        )
+        total, valid_rows, invalid = res.all.withColumn(
+            "__invalid_upto", F.count(F.when(is_invalid, 1)).over(upto)
+        ).agg(
+            F.count(F.lit(1)),
+            F.count(F.when(~is_invalid, 1)),
+            # collect_list skips the NULLs every other row gives
+            F.collect_list(F.when(
+                is_invalid & (F.col("__invalid_upto") <= error_cap),
+                F.col(V.ERRORS_COL),
+            )),
+        ).first()
+        return {
+            "errors": res.schema_errors + [e for errs in invalid for e in errs],
+            "warnings": res.warnings,
+            "preview": [r.asDict() for r in res.valid.limit(5).collect()],
+            "totalRows": total,
+            "validRows": valid_rows,
+            "invalidRows": total - valid_rows,
+            "errorsTruncated": total - valid_rows > len(invalid),
+        }
 
     def _persist_media(self, files: DataFrame) -> DataFrame:
         """Persist an ingested file table (evictable: a lost block is
@@ -322,9 +352,8 @@ class Engine:
 
         ``error_cap`` bounds the strict-mode error collect the same way
         as :meth:`validate_csv` — see there."""
-        check_csv_file(path)
         ct = self.registry.get(ct_name)
-        res = V.validate_df(csv_scan(self.spark, path), ct, self.registry)
+        res = V.validate_df(batch_scan(self.spark, path), ct, self.registry)
         # the scan+validate subtree feeds n_invalid, the error collect
         # AND the table write — cache it once
         res.all.persist()
@@ -461,6 +490,10 @@ class Engine:
         if row_key not in df.columns:
             row_key = "__xid"
             df = df.withColumn(row_key, F.monotonically_increasing_id())
+        # multi relations explode the stored rows: exploding the frame
+        # the scalar flattens have joined would carry their broadcast
+        # joins into the explode too (Spark keeps an unused left join)
+        stored = df
         for fname, attr in ct.attributes.items():
             if attr.type != "relation" or fname not in df.columns:
                 continue
@@ -469,7 +502,10 @@ class Engine:
             tgt = self.table(attr.target)
             tct = self.registry.get(attr.target)
             if attr.is_multi_relation:
-                df = X.flatten_multi_relation(df, fname, tgt, tct, row_key=row_key)
+                displays = X.multi_relation_display(
+                    stored, fname, tgt, tct, row_key=row_key
+                )
+                df = df.drop(fname).join(displays, row_key, "left")
             else:
                 df = X.flatten_scalar_relation(df, fname, tgt, tct)
         if row_key == "__xid":

@@ -70,6 +70,28 @@ def flatten_multi_relation(
 ) -> DataFrame:
     """A6: array-of-FK column -> `', '`-joined display values, order =
     array order (the reference joins in populate order)."""
+    displays = multi_relation_display(
+        df, field, target, target_ct, id_col=id_col, row_key=row_key
+    )
+    return df.drop(field).join(displays, row_key, "left")
+
+
+def multi_relation_display(
+    df: DataFrame,
+    field: str,
+    target: DataFrame,
+    target_ct: ContentType,
+    *,
+    id_col: str = "id",
+    row_key: str = "id",
+) -> DataFrame:
+    """``(row_key, `field.<first>`)``: each row's FK array as its
+    `', '`-joined display values, for rows with at least one FK.
+
+    :func:`flatten_multi_relation` joins this back onto ``df``; a caller
+    that has already joined other columns onto ``df`` can explode the
+    frame as it was before them instead, since Spark does not prune an
+    unused left join from the exploding side."""
     disp = first_column(target_ct)
     dim = F.broadcast(
         target.select(F.col(id_col).alias("__dim_id"), F.col(disp).cast("string").alias("__d"))
@@ -82,7 +104,7 @@ def flatten_multi_relation(
     exploded = df.select(
         row_key, F.posexplode_outer(field).alias("__pos", "__fk")
     ).where(F.col("__fk").isNotNull())
-    joined = (
+    return (
         exploded.join(dim, F.col("__fk") == F.col("__dim_id"), "left")
         .groupBy(row_key)
         .agg(
@@ -95,7 +117,6 @@ def flatten_multi_relation(
             ).alias(f"{field}.{disp}")
         )
     )
-    return df.drop(field).join(joined, row_key, "left")
 
 
 def flatten_single_component(df: DataFrame, field: str) -> DataFrame:

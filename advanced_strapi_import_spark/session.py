@@ -9,6 +9,7 @@ dimension joins, Arrow for the (rare) pandas-UDF paths, UTC session time.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -27,6 +28,13 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 EXCLUDED_OPTIMIZER_RULES = (
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 )
+
+# An ORDER BY ... LIMIT n plans as TakeOrderedAndProject, whose top-K
+# buffer is sized by n, not by the rows it sees: export_csv(limit=10**9,
+# order_by=...) ran a 4g driver out of heap on a 50-row table. Above this
+# many rows Spark plans a sort followed by a limit instead. The bound sits
+# far above the engine's own limits (the export default is 1000 rows).
+TOPK_SORT_FALLBACK_ROWS = 1 << 20
 
 
 def get_spark(app_name: str = "advanced-strapi-import-spark",
@@ -73,6 +81,8 @@ def get_spark(app_name: str = "advanced-strapi-import-spark",
         # plans). One class is small; keep them all.
         .config("spark.sql.codegen.cache.maxEntries", "10000")
         .config("spark.sql.optimizer.excludedRules", EXCLUDED_OPTIMIZER_RULES)
+        .config("spark.sql.execution.topKSortFallbackThreshold",
+                str(TOPK_SORT_FALLBACK_ROWS))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -100,27 +110,31 @@ def cluster_conf(executors: int = 1000, cores_per_executor: int = 4) -> dict[str
         # arrow paths (multimodal/zip stages): payload-sized batches
         "spark.sql.execution.arrow.maxRecordsPerBatch": "1024",
         "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.topKSortFallbackThreshold": str(TOPK_SORT_FALLBACK_ROWS),
         # shuffle robustness at 1000 executors
         "spark.shuffle.service.enabled": "true",
         "spark.stage.maxConsecutiveAttempts": "8",
     }
 
 
-# sessions already tuned, by applicationId: the driver contract binds
-# tune() into EVERY query invocation (__spark_entry__.queries), so a
-# 327-query run would otherwise pay 8 py4j conf.set round trips per
-# query for values that were set on the first call and that nothing in
-# the engine changes without restoring (r12 VERDICT task 2 — per-query
-# constant cost). A new session (new applicationId) re-tunes.
-_TUNED: set[str] = set()
+# sessions already tuned: the driver contract binds tune() into EVERY
+# query invocation (__spark_entry__.queries), so a 327-query run would
+# otherwise pay a py4j conf.set round trip per knob per query for values
+# that were set on the first call and that nothing in the engine changes
+# without restoring (r12 VERDICT task 2 — per-query constant cost). The
+# memo holds the session objects themselves, weakly: a
+# ``spark.newSession()`` clone shares its parent's applicationId but has
+# its own SQL conf, so it is a new entry and is tuned, and an entry goes
+# when its session is collected.
+_TUNED: weakref.WeakSet[SparkSession] = weakref.WeakSet()
 
 
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable knobs to an externally provided session
     (the driver hands us its own SparkSession in ``entry``); no-op on
-    a session this process already tuned."""
-    app = spark.sparkContext.applicationId
-    if app in _TUNED:
+    a session this process already tuned, so a conf the caller changes
+    after the first call stays as the caller set it."""
+    if spark in _TUNED:
         return spark
     for k, v in [
         ("spark.sql.adaptive.enabled", "true"),
@@ -134,12 +148,12 @@ def tune(spark: SparkSession) -> SparkSession:
         ("spark.sql.execution.arrow.pyspark.enabled", "true"),
         ("spark.sql.execution.pythonUDTF.arrow.enabled", "true"),
         ("spark.sql.optimizer.excludedRules", EXCLUDED_OPTIMIZER_RULES),
+        ("spark.sql.execution.topKSortFallbackThreshold",
+         str(TOPK_SORT_FALLBACK_ROWS)),
     ]:
         try:
             spark.conf.set(k, v)
         except Exception:
             pass  # conf may be fixed at session start; all are safe to skip
-    if len(_TUNED) >= 64:
-        _TUNED.clear()
-    _TUNED.add(app)
+    _TUNED.add(spark)
     return spark

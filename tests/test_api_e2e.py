@@ -58,8 +58,9 @@ def _newest_job(spark) -> int:
 
 
 def _sql_actions(spark, fn, *args, **kw):
-    """(fn's result, number of SQL actions it ran): the root SQL
-    executions the status store gained during the call."""
+    """(fn's result, the executed physical plans of the SQL actions it
+    ran): one plan per root SQL execution the status store gained
+    during the call."""
     sc = spark.sparkContext._jsc.sc()
     store = spark._jsparkSession.sharedState().statusStore()
 
@@ -72,7 +73,28 @@ def _sql_actions(spark, fn, *args, **kw):
     before = max((e.executionId() for e in newest(1)), default=-1)
     out = fn(*args, **kw)
     execs = [e for e in newest() if e.executionId() > before]
-    return out, sum(e.rootExecutionId() == e.executionId() for e in execs)
+    return out, [e.physicalPlanDescription() for e in execs
+                 if e.rootExecutionId() == e.executionId()]
+
+
+def _shuffles_below_windows(plans: list[str]) -> tuple[int, int]:
+    """(Window nodes, shuffles below any of them) in formatted plans'
+    trees: a node's subtree is the lines after it indented deeper."""
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    windows = shuffles = 0
+    for plan in plans:
+        lines = plan.split("\n\n", 1)[0].splitlines()
+        for i, line in enumerate(lines):
+            if not line.lstrip(" :+-*").startswith("Window ("):
+                continue
+            windows += 1
+            for sub in lines[i + 1:]:
+                if depth(sub) <= depth(line):
+                    break
+                shuffles += "Exchange" in sub or "ShuffleQueryStage" in sub
+    return windows, shuffles
 
 
 def test_list_content_types(engine):
@@ -138,30 +160,75 @@ def test_upsert_workflow(engine, tmp_path):
 
 
 def test_verbs_run_only_their_own_actions(engine, spark, tmp_path):
-    """Beyond the CSV scan's own header read, validate_csv runs three
-    SQL actions: the capped error collect, ONE aggregate for both row
-    counts, and the preview. An import runs two: the invalid-row count
+    """Beyond the CSV scan's own header read, validate_csv runs two SQL
+    actions: ONE aggregate for both row counts and the capped error
+    list, and the preview. An import runs two: the invalid-row count
     and the table write; its created/updated counters ride the write,
-    with no count or collect of their own."""
+    with no count or collect of their own. The batch is one partition
+    from the scan onwards, so no plan shuffles below the row-number
+    window."""
     from advanced_strapi_import_spark.sources.csv_source import csv_scan
 
     p1 = _csv(tmp_path, "a.csv",
               "name,country,established,active\n"
               "Acme,India,2000,true\nBelco,USA,1990,no\n,USA,bad,x\n")
-    _, scan = _sql_actions(spark, csv_scan, spark, p1)
-    rep, n = _sql_actions(spark, engine.validate_csv, p1, "company")
+    _, plans = _sql_actions(spark, csv_scan, spark, p1)
+    scan = len(plans)
+    rep, plans = _sql_actions(spark, engine.validate_csv, p1, "company")
     assert (rep["totalRows"], rep["validRows"], rep["invalidRows"]) == (3, 2, 1)
-    assert n == scan + 3
-    out, n = _sql_actions(spark, engine.import_csv, p1, "company")
+    assert len(plans) == scan + 2
+    windows, shuffles = _shuffles_below_windows(plans)
+    assert windows and not shuffles, plans
+    out, plans = _sql_actions(spark, engine.import_csv, p1, "company")
     assert out == {"created": 2, "updated": 0, "invalidRows": 1}
-    assert n == scan + 2
+    assert len(plans) == scan + 2
+    windows, shuffles = _shuffles_below_windows(plans)
+    assert windows and not shuffles, plans
     p2 = _csv(tmp_path, "b.csv",
               "name,country,established,active\n"
               "Acme,China,2001,false\nNewco,India,2020,yes\n")
-    out, n = _sql_actions(spark, engine.import_csv, p2, "company",
-                          upsert=True, upsert_field="name")
+    out, plans = _sql_actions(spark, engine.import_csv, p2, "company",
+                              upsert=True, upsert_field="name")
     assert out == {"created": 1, "updated": 1, "invalidRows": 0}
-    assert n == scan + 2
+    assert len(plans) == scan + 2
+
+
+def test_batch_split_across_scan_partitions_keeps_file_order(engine, spark, tmp_path):
+    """A CSV the scan splits into several partitions still numbers its
+    rows by data line ("Row N" = the N-th line after the header), and an
+    upsert whose duplicate key sits in two different splits keeps the
+    later row."""
+    from advanced_strapi_import_spark.sources.csv_source import csv_scan
+
+    n = 600
+    bad = set(range(5, n + 1, 37))
+    lines = ["name,country,established,active"]
+    for i in range(1, n + 1):
+        name = "Dup" if i in (1, n) else f"co{i:04d}"
+        year = f"bad{i}" if i in bad else str(1000 + i)
+        lines.append(f"{name},India,{year},true")
+    p = _csv(tmp_path, "split.csv", "\n".join(lines) + "\n")
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2048")
+    try:
+        assert csv_scan(spark, p).rdd.getNumPartitions() > 4
+        rep = engine.validate_csv(p, "company")
+        assert rep["invalidRows"] == len(bad)
+        assert rep["errors"] == [
+            f'Row {i}: "established" must be a number' for i in sorted(bad)
+        ]
+        assert rep["preview"][0]["established"] == 1001
+        engine.import_csv(_csv(tmp_path, "seed.csv",
+                               "name,country,established,active\n"
+                               "Dup,USA,1,false\n"), "company")
+        out = engine.import_csv(p, "company", upsert=True, upsert_field="name")
+        assert out == {"created": n - 2 - len(bad), "updated": 1,
+                       "invalidRows": len(bad)}
+        dup = engine.table("company").filter("name = 'Dup'").collect()
+        assert [r["established"] for r in dup] == [1000 + n]
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_table_reads_recorded_schema_without_inference(engine, spark, tmp_path):
@@ -243,6 +310,104 @@ def test_export_round_trip(engine, spark, tmp_path):
         str(tmp_path / "export2")
     ).count()
     assert stats == {"n_rows": n_file} and n_file == 2
+
+
+def _csv_lines(out_dir) -> list[str]:
+    """The lines of a CSV directory's part files, in part-file order."""
+    lines = []
+    for part in sorted(glob.glob(f"{out_dir}/part-*.csv")):
+        with open(part) as f:
+            lines += f.read().splitlines()
+    return lines
+
+
+def test_export_header_and_rows_are_pinned(spark, tmp_path):
+    """The exact CSV export_csv writes for a content type with a scalar
+    relation, a multi relation, a single component and a media field:
+    header order and every cell. Flattened columns land in attribute
+    order after the stored columns they replace; metadata drops."""
+    from advanced_strapi_import_spark.schema import Registry
+
+    registry = Registry.from_dict({
+        "contentTypes": {
+            "country": {
+                "uid": "api::country.country",
+                "attributes": {
+                    "id": {"type": "integer"},
+                    "name": {"type": "string", "required": True},
+                    "code": {"type": "string", "unique": True},
+                },
+            },
+            "product": {
+                "uid": "api::product.product",
+                "attributes": {
+                    "id": {"type": "integer"},
+                    "name": {"type": "string", "required": True},
+                    "maker": {"type": "relation", "relation": "manyToOne",
+                              "target": "country"},
+                    "markets": {"type": "relation", "relation": "manyToMany",
+                                "target": "country"},
+                    "spec": {"type": "component", "component": "address"},
+                    "photos": {"type": "media"},
+                },
+            },
+        },
+        "components": {
+            "address": {
+                "uid": "test.address",
+                "attributes": {"street": {"type": "string"},
+                               "city": {"type": "string"}},
+            },
+        },
+    })
+    eng = Engine(spark=spark, registry=registry, storage_root=str(tmp_path / "s"))
+    eng.write_table("country", spark.createDataFrame(
+        COUNTRIES, "id long, name string, code string"))
+    eng.write_table("product", spark.createDataFrame(
+        [
+            (3, "Gamma", 2, [4, 1, 4], ("3 Elm", "Pune"), [30, 31], "2020-01-01"),
+            (1, "Alpha", 1, [3], ("1 Main, Apt 2", "Austin"), [10], "2020-01-02"),
+            (2, "Beta", None, None, None, [], "2020-01-03"),
+            (4, "Delta", 9, [], ("4 Oak", None), None, "2020-01-04"),
+        ],
+        "id long, name string, maker long, markets array<long>, "
+        "spec struct<street:string,city:string>, photos array<long>, "
+        "createdAt string",
+    ))
+    out = str(tmp_path / "export")
+    df = eng.export_csv("product", out, order_by="id")
+    header = "id,name,photos,maker.name,markets.name,spec.street,spec.city"
+    assert df.columns == header.split(",")
+    assert _csv_lines(out) == [
+        header,
+        '1,Alpha,10,India,China,"1 Main, Apt 2",Austin',
+        "2,Beta,,,,,",
+        '3,Gamma,"30, 31",United States,"USA, India, USA",3 Elm,Pune',
+        "4,Delta,,,,4 Oak,",
+    ]
+
+
+def test_export_limit_far_above_row_count_writes_every_row(engine, spark, tmp_path):
+    """export_csv(limit=10**9, order_by=...) on a small table writes every
+    row in key order. An ORDER BY + LIMIT that plans as
+    TakeOrderedAndProject sizes its top-K buffer by the limit, which
+    runs the driver out of heap, so the plan is checked before the
+    export runs."""
+    ids = list(range(1, 51))
+    ids = ids[1::2] + ids[::2]  # stored out of key order
+    engine.write_table("country", spark.createDataFrame(
+        [(i, f"c{i:02d}", f"C{i}") for i in ids], "id long, name string, code string"
+    ).repartition(4))
+    plan = engine.table("country").orderBy("id").limit(10**9)._jdf \
+        .queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject" not in plan, plan
+    out = str(tmp_path / "export")
+    stats: dict = {}
+    engine.export_csv("country", out, limit=10**9, order_by="id", stats_out=stats)
+    assert stats == {"n_rows": 50}
+    assert _csv_lines(out) == ["id,name,code"] + [
+        f"{i},c{i:02d},C{i}" for i in range(1, 51)
+    ]
 
 
 def test_import_strict_aborts_on_invalid(engine, tmp_path):

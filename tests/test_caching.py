@@ -117,16 +117,16 @@ def test_load_events_memo_is_conf_aware(spark):
 
 
 def test_tune_is_memoized_per_session(spark):
-    """tune() pays its 8 conf.set py4j round trips once per
-    applicationId — the driver binds it into every query invocation
-    (r13, VERDICT r12 task 2). Semantics pinned here: a repeat call on
-    a tuned session is a no-op (it must NOT fight a harness that
-    adjusted a conf mid-suite); a fresh memo re-applies."""
+    """tune() pays its conf.set py4j round trips once per session —
+    the driver binds it into every query invocation (r13, VERDICT r12
+    task 2). Semantics pinned here: a repeat call on a tuned session is
+    a no-op (it must NOT fight a harness that adjusted a conf
+    mid-suite); a fresh memo re-applies."""
     from advanced_strapi_import_spark import session as S
 
     S._TUNED.clear()
     S.tune(spark)
-    assert spark.sparkContext.applicationId in S._TUNED
+    assert spark in S._TUNED
     prev = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
@@ -139,6 +139,20 @@ def test_tune_is_memoized_per_session(spark):
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def test_tune_tunes_a_new_session_clone(spark):
+    """A ``spark.newSession()`` clone shares its parent's applicationId
+    but not its SQL conf: tuning the parent must not mark the clone as
+    tuned."""
+    from advanced_strapi_import_spark import session as S
+
+    S.tune(spark)
+    clone = spark.newSession()
+    clone.conf.set("spark.sql.session.timeZone", "America/New_York")
+    assert S.tune(clone) is clone
+    assert clone.conf.get("spark.sql.session.timeZone") == "UTC"
+    assert clone in S._TUNED and spark in S._TUNED
 
 
 def test_load_memoizes_scan_plan_per_file_state(spark, tmp_path):
